@@ -1,13 +1,47 @@
 package graft
+import java.util.Locale
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Three decimals, independent of the JVM's default locale: a
+    * comma-decimal locale would otherwise make the record invalid JSON. */
+  def r3(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Times `passes` full passes over `lanes` and keeps each lane's
+    * minimum. A lane that throws in any pass is failed: it gets no time,
+    * stays out of the results (and so out of every total) and is returned
+    * apart with its exception's class. */
+  def timeLanes(lanes: Seq[(String, () => Unit)], passes: Int)
+      : (Seq[(String, Double)], Seq[(String, String)]) = {
+    val samples = scala.collection.mutable.Map[String, List[Double]]()
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    (1 to passes).foreach { _ =>
+      lanes.foreach { case (name, run) =>
+        val t0 = System.nanoTime()
+        try {
+          run()
+          val t = (System.nanoTime() - t0) / 1e9
+          samples.updateWith(name)(s => Some(t :: s.getOrElse(Nil)))
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed.getOrElseUpdate(name, e.getClass.getName)
+        }
+      }
+    }
+    (lanes.collect { case (name, _) if !failed.contains(name) => name -> samples(name).min },
+      failed.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scratch on tmpfs when available: shuffle spill files and streaming
-    // micro-batch checkpoints otherwise hit the root disk and dominate
-    // the short stateful queries (RAM-disk scratch is standard ops
+    // Scratch on tmpfs when available, for shuffle spill files and
+    // streaming micro-batch checkpoints (RAM-disk scratch is standard ops
     // practice on bench/ingest nodes; correctness paths don't use it).
+    // The short stateful queries' fixed cost was not the disk, though:
+    // each checkpoint, state-store and .crc file forked `chmod`, each
+    // FileContext rename `readlink` — ~400 process starts per
+    // s_session_native execution at ~3 ms each. Tables.configure
+    // removes those forks (graft.io.NioLocalFileSystem).
     var builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -78,24 +112,17 @@ object Bench {
     // runs warm+1 — at 10x the data, pass count is noise-trimming, and
     // the question is growth FACTORS, not +-5%.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val samples = scala.collection.mutable.Map[String, List[Double]]()
-    (1 to passes).foreach { _ =>
-      ordered.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // noop sink fully materializes every output row (count() would
-        // let Spark skip projections).
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        samples.updateWith(name)(s => Some(t :: s.getOrElse(Nil)))
-      }
-    }
-    val results = ordered.map { case (name, _) => name -> samples(name).min }
+    // noop sink fully materializes every output row (count() would let
+    // Spark skip projections).
+    val (results, failed) = timeLanes(ordered.map { case (name, fn) =>
+      name -> (() => fn(spark, sfDir).write.mode("overwrite").format("noop").save())
+    }, passes)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    // Failed lanes are listed by exception class; they have no time.
+    val failedJs = failed.map { case (k, c) => s"\"$k\":\"failed:$c\"" }
+      .mkString("{", ",", "}")
     val loadEnd = loadavg()
     // Convention pinned in the record itself (round-13, VERDICT item 2):
     // every per-query value is the MINIMUM over `passes` timed passes
@@ -103,7 +130,7 @@ object Bench {
     // Cross-round curve points are only comparable when this field
     // matches.
     val detailed =
-      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"per_query_stat":"min_of_passes","queries":$qs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"per_query_stat":"min_of_passes","queries":$qs,"failed":$failedJs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
     // The driver keeps only a short stdout tail (~2.2 KB); the detailed
     // per-query record (~10 KB over 311 lanes) overruns it, which left
     // PERF per_query/scaling EMPTY in r12/r13 (the driver parsed only a
@@ -121,7 +148,6 @@ object Bench {
       else if (n.startsWith("v_")) "fam_v"
       else if (n.matches("q\\d+_.*")) "fam_tpch"
       else "fam_q"
-    def r3(v: Double): String = f"$v%.3f"
     val famTotals = results.groupBy { case (n, _) => fam(n) }
       .view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
     val slowest = results.sortBy { case (_, v) => -v }.take(15)
@@ -129,12 +155,13 @@ object Bench {
       slowest.map { case (k, v) => s"\"$k\":${r3(v)}" })
       .mkString("{", ",", "}")
     val short =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$compactQs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$compactQs,"failed":$failedJs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
     println(detailed)
     println(short)
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_out.json"),
       (detailed + "\n" + short + "\n").getBytes("UTF-8"))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -94,4 +94,9 @@ object Tables {
     // day-grained sketch rollups (365 groups). Raise the fallback; the
     // sketch buffers are the memory cost either way.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
+    // Local files through NIO instead of Hadoop's forked `chmod` and
+    // `readlink` (graft.io.NioLocalFileSystem): 2,435 → 18 process starts
+    // per lane_mix benchmark run, s_session_native 3.60 → 2.55 s.
+    .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
 }

@@ -638,20 +638,19 @@ object StreamingQueries {
     // dedup watermark, schema agg) and run at n=2; the rest stay at 8 —
     // s_minhash_dedup regressed +0.44 s at p2 (its banded-signature
     // shuffle wants the parallelism) and the window/session/map-state
-    // lanes were neutral-to-worse. Phase accounting (StreamPhaseProbe,
-    // Spark's own durationMs buckets) shows the per-batch time is ~80%
-    // addBatch (real stateful execution), ~11% queryPlanning, ~8%
-    // offset/WAL commits — the "fixed overhead" is mostly genuine work
-    // at this fixture size, which is why partition count, not provider
-    // or trigger, is the only knob that moved it.
+    // lanes were neutral-to-worse. Much of that fixed overhead was not
+    // stateful work but process forks: without the native Hadoop library
+    // every checkpoint, state-store delta and .crc file forked `chmod`,
+    // and every FileContext rename `readlink` — ~400 process starts per
+    // s_session_native execution at ~3 ms each (lane_mix benchmark,
+    // JFR jdk.ProcessStart, 4-core box). Tables.configure installs
+    // graft.io.NioLocalFileSystem, which does both without forking;
+    // s_session_native went 3.60 → 2.55 s there (medians, 10 pairs).
     val key = "spark.sql.shuffle.partitions"
     val nd = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = s.conf.get(key)
     val prevNd = s.conf.get(nd)
-    // deploy-time override: state sizing is environment-dependent (the
-    // whole point of the knob) — let a harness pin it without a rebuild
-    val eff = sys.env.get("GRAFT_STATE_PARTS").map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
+    s.conf.set(key, n.toString)
     // A no-data micro-batch only matters when event-time state must
     // advance without input (watermark eviction, timers). The complete-
     // mode and NoTimeout queries here have neither, so the extra empty
